@@ -18,7 +18,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from shifts_etl_spark.operators.dedup import release_orphaned_caches
 from shifts_etl_spark.plans.catalog import BENCH_QUERIES, CATALOG
 from shifts_etl_spark.session import get_spark
 from shifts_etl_spark.sources.tables import load_table
@@ -54,11 +53,10 @@ def main() -> None:
         # with min-of-2 on an otherwise idle box). Plans are rebuilt per
         # run (no result cache), and — r11, VERDICT r10 #7 — the Spark
         # CacheManager is cleared between runs so operators that persist
-        # internal frames (x3's signature/banded caches) recompute from
-        # parquet on every timed run instead of run 1 only.
+        # internal frames (x3's signature cache) recompute from parquet on
+        # every timed run instead of run 1 only.
         best, n = None, 0
         for _ in range(3):
-            release_orphaned_caches()
             spark.catalog.clearCache()
             df = spec.spark(spark, sf_dir)
             t0 = time.time()

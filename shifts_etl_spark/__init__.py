@@ -5,6 +5,7 @@ data-processing capabilities of the reference ETL pipeline
 Layout (see SURVEY.md §7):
   schemas.py    explicit StructTypes for the nested ingest doc + 5 tables
   session.py    SparkSession factory (UTC, AQE, tuned shuffle partitions)
+  caching.py    cache_scope / scoped: who releases an operator's caches
   sources/      paginated JSON ingestion, synthetic generator, parquet registry
   operators/    flatten, kpi, quality, dedup, simsearch, textstats, windows,
                 multimodal

@@ -84,22 +84,24 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "curate":
+        from .caching import cache_scope
         from .pipeline import curate
 
         docs = spark.read.parquet(args.input)
         eval_docs = (
             spark.read.parquet(args.eval_input) if args.eval_input else None
         )
-        _, ledger = curate(
-            spark,
-            docs,
-            budget_docs=args.budget_docs,
-            temperature=args.temperature,
-            min_quality=args.min_quality,
-            eval_docs=eval_docs,
-            pii_scrub=not args.no_pii_scrub,
-            output_dir=args.output,
-        )
+        with cache_scope():
+            _, ledger = curate(
+                spark,
+                docs,
+                budget_docs=args.budget_docs,
+                temperature=args.temperature,
+                min_quality=args.min_quality,
+                eval_docs=eval_docs,
+                pii_scrub=not args.no_pii_scrub,
+                output_dir=args.output,
+            )
         for row in ledger:
             print(row)
         return 0
@@ -107,10 +109,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "prepare":
         from pyspark.sql import functions as F
 
+        from .caching import cache_scope
         from .pipeline import prepare_training_data
 
-        caches: list = []
-        try:
+        with cache_scope():
             stages = prepare_training_data(
                 spark,
                 spark.read.parquet(args.input),
@@ -119,7 +121,6 @@ def main(argv: list[str] | None = None) -> int:
                 chunk_tokens=args.chunk_tokens,
                 overlap=args.overlap,
                 budget_tokens=args.budget_tokens,
-                _cache_registry=caches,
             )
             if args.output:
                 # write_batch already materialized every stage — count
@@ -135,9 +136,6 @@ def main(argv: list[str] | None = None) -> int:
                 "packs": stages["packs"].select("pack_id").distinct().count(),
                 "split": stages["split"].count(),
             }
-        finally:
-            for c in caches:
-                c.unpersist()
         print(counts)
         return 0
 

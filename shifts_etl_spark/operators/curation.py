@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..caching import cache_scope, scoped
 from .dedup import shingle_explode
 from . import clustering
 
@@ -144,7 +145,6 @@ def semantic_dedup(
     candidate_planes: int | None = 32,
     candidate_bands: int = 4,
     hot_bucket_cap: int = 64,
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means the embeddings, then inside
     each cell drop every vector whose cosine to a LOWER-id cell-mate is
@@ -209,7 +209,6 @@ def semantic_dedup(
             n_planes=candidate_planes,
             bands=candidate_bands,
             hot_bucket_cap=hot_bucket_cap,
-            _cache_registry=_cache_registry,
         )
         cand = (
             cool.alias("cl")
@@ -960,36 +959,38 @@ def greedy_coverage_select(
     is subtracted incrementally (only the last pick's shingles
     anti-join each round, and the pair frame shrinks monotonically).
     localCheckpoint truncates the k-join lineage. Driver holds k rows
-    and one scalar — never data."""
+    and one scalar — never data; the pair cache and the checkpoints are
+    released before the function returns."""
     from .dedup import shingle_explode
 
-    pairs = (
-        shingle_explode(docs, text_col, id_col, shingle_n)
-        .distinct()
-        .persist()
-    )
-    total = pairs.select("s").distinct().count()
-    remaining = pairs
-    rows, cum = [], 0
-    for rank in range(1, k + 1):
-        best = (
-            remaining.groupBy("doc")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), F.col("doc"))
-            .limit(1)
-            .collect()
+    with cache_scope():
+        pairs = scoped(
+            shingle_explode(docs, text_col, id_col, shingle_n)
+            .distinct()
+            .persist()
         )
-        if not best:
-            break
-        doc_id, gain = best[0].doc, best[0].n
-        cum += gain
-        rows.append((rank, doc_id, gain, cum))
-        newly = remaining.where(F.col("doc") == doc_id).select("s")
-        remaining = (
-            remaining.join(newly, "s", "left_anti")
-            .where(F.col("doc") != doc_id)
-            .localCheckpoint(eager=False)
-        )
+        total = pairs.select("s").distinct().count()
+        remaining = pairs
+        rows, cum = [], 0
+        for rank in range(1, k + 1):
+            best = (
+                remaining.groupBy("doc")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .orderBy(F.col("n").desc(), F.col("doc"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            doc_id, gain = best[0].doc, best[0].n
+            cum += gain
+            rows.append((rank, doc_id, gain, cum))
+            newly = remaining.where(F.col("doc") == doc_id).select("s")
+            remaining = scoped(
+                remaining.join(newly, "s", "left_anti")
+                .where(F.col("doc") != doc_id)
+                .localCheckpoint(eager=False)
+            )
     spark = docs.sparkSession
     out = spark.createDataFrame(
         rows, schema="rank int, doc_id long, marginal_gain long, cumulative_coverage long"

@@ -19,82 +19,41 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import threading
+import contextvars
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..caching import cache_scope, scoped
 from .textstats import normalize_text, tokens
 
-# Persist handles from registry-less calls land here instead of leaking
-# for the session lifetime (the r8 ADVICE finding: catalog entries call
-# the LSH operators without a _cache_registry, and a 343-entry sweep in
-# one session accumulated every run's cached (id, bucket) / signature
-# frames). The list is BOUNDED, not drained per call: when it grows past
-# _ORPHAN_CACHE_BOUND the OLDEST handles are unpersisted (FIFO), so a
-# long sweep holds at most a dozen stale frames while RECENT handles stay
-# warm — Spark's cache manager substitutes a persisted frame into any
-# later identical plan, which is what makes a warm-up + timed bench pair
-# (and a retry of the same entry) fast; an eager per-call drain measured
-# a 5× bench regression on x3 by discarding exactly that reuse. Callers
-# who control materialization should still pass _cache_registry and
-# unpersist exactly (minhash_dedup_components does).
-_ORPHANED_CACHES: list[DataFrame] = []
-_ORPHAN_CACHE_BOUND = 12
-# The bound is COUNT-based: at corpus scale each orphaned frame is
-# itself corpus-sized (~0.5 KB/doc signatures), so a long-lived driver
-# sweeping many entries can pin up to _ORPHAN_CACHE_BOUND corpus-scale
-# frames in executor storage between trims. Long-lived drivers at scale
-# should call release_orphaned_caches() between entries (storage
-# pressure only — an evicted or unpersisted frame recomputes, never
-# corrupts). The lock serializes append/trim/drain so concurrent driver
-# threads (parallel streaming queries, thread-pooled entry sweeps)
-# cannot race a pop against a concurrent drain.
-_ORPHAN_LOCK = threading.Lock()
+# Cache ownership: an operator that persists a frame its returned lazy
+# frame still reads records the handle with ``scoped`` and leaves the
+# release to the caller's ``cache_scope`` (the catalog opens one per
+# entry); a frame only the operator's own body reads is released before
+# it returns. Checkpoint release: a local checkpoint cuts lineage, so a
+# lost block fails the job instead of recomputing — release one only
+# once no lazy frame reads it (``minhash_dedup_components`` drops its
+# signature cache on return but leaves ``dedup_clusters``' label
+# checkpoints to the caller's scope).
 
 
-def _unpersist_quietly(df: DataFrame) -> None:
-    # a handle whose SparkSession has been stopped raises on unpersist;
-    # a dead context holds no cached blocks, so "already released" is
-    # the correct reading — swallowing keeps a NEW session's calls from
-    # crashing on a previous session's orphans
-    try:
-        df.unpersist()
-    except Exception:
-        pass
-
-
-def release_orphaned_caches() -> int:
-    """Unpersist every cache handle orphaned by registry-less LSH calls;
-    returns how many were released. Safe at any time — an unpersisted
-    frame recomputes, never corrupts; handles from stopped sessions are
-    treated as already released. Pops as it goes so a surprise error
-    can never leave the list half-drained."""
-    n = 0
-    while True:
-        with _ORPHAN_LOCK:
-            if not _ORPHANED_CACHES:
-                return n
-            df = _ORPHANED_CACHES.pop()
-        _unpersist_quietly(df)
-        n += 1
-
-
-def _track_cache(df: DataFrame, registry: list | None) -> DataFrame:
-    """Persist ``df`` and record the handle — in the caller's registry
-    when given, else in the bounded module orphan list (oldest handles
-    unpersist once the bound is exceeded)."""
-    df.persist()
-    if registry is not None:
-        registry.append(df)
-        return df
-    evicted: list[DataFrame] = []
-    with _ORPHAN_LOCK:
-        _ORPHANED_CACHES.append(df)
-        while len(_ORPHANED_CACHES) > _ORPHAN_CACHE_BOUND:
-            evicted.append(_ORPHANED_CACHES.pop(0))
-    for old in evicted:  # unpersist outside the lock (it can block on the JVM)
-        _unpersist_quietly(old)
-    return df
+def _drop_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """Drop every row whose ``keys`` group holds more than ``cap`` rows.
+    Hot groups are RARE by construction (an over-cap bucket is degenerate
+    boilerplate), so a map-side-combinable count finds their keys
+    (shuffle = keys + partial count only) and a broadcast ANTI join drops
+    their members — no sort, no exchange of ``df``. Measured 1.7× faster
+    end-to-end than the window-count form at sf0.01/sf0.1. The hot set is
+    bounded by n_rows / cap; if an adversarial input ever made that too
+    big to broadcast, a count window over the keys is the drop-in
+    fallback."""
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > cap)
+        .select(*keys)
+    )
+    return df.join(F.broadcast(hot), keys, "left_anti")
 
 
 def _cooled_band_buckets(
@@ -106,7 +65,6 @@ def _cooled_band_buckets(
     n_planes: int = 32,
     bands: int = 4,
     hot_bucket_cap: int = 64,
-    _cache_registry: list | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """Shared banded-candidate machinery (one implementation for
     embedding_nn_pairs_lsh, semantic_dedup, hard_negative_topk, and the
@@ -117,25 +75,17 @@ def _cooled_band_buckets(
     candidate-join key list (block_keys + ["bucket"]). Callers self-join
     the cool frame on those keys with their own pair predicate; vectors
     re-attach BY ID afterwards, so nothing here ever shuffles an
-    embedding. The persist handle follows the _track_cache contract
-    (caller registry, else the bounded orphan list)."""
+    embedding. The persisted bucket frame is ``scoped`` (the caller's
+    scope releases it)."""
     from .simsearch import add_det_lsh_signature
 
     sig = add_det_lsh_signature(base, dim, n_planes, bands, vec_col)
-    bucketed = _track_cache(
-        sig.select(*keep, F.explode("buckets").alias("bucket")),
-        _cache_registry,
+    bucketed = scoped(
+        sig.select(*keep, F.explode("buckets").alias("bucket")).persist()
     )
     keys = [*block_keys, "bucket"]
-    hot = (
-        bucketed.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > hot_bucket_cap)
-        .select(*keys)
-    )
-    # the hot set is bounded by |blocks| * bands * 2^(n_planes/bands)
-    # rows — broadcast the anti-join so cooling never shuffles members
-    return bucketed.join(F.broadcast(hot), keys, "left_anti"), keys
+    # the hot set is bounded by |blocks| * bands * 2^(n_planes/bands) rows
+    return _drop_hot_keys(bucketed, keys, hot_bucket_cap), keys
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -401,6 +351,21 @@ def minhash_signatures(
     )
 
 
+def _band_hashes(hash_fn: str, num_hashes: int, bands: int):
+    """Per-band bucket keys of the ``sig`` column: the hash of each band's
+    comma-joined slot values, salted by band index. Literal per-band
+    expressions (not a lambda over sequence()) so the md5 family's
+    distinct string salts stay plan-time constants."""
+    r = num_hashes // bands
+    hf = _hash_family(hash_fn)
+    return F.array(
+        *[
+            hf(F.concat_ws(",", F.slice("sig", b * r + 1, r)), b)
+            for b in range(bands)
+        ]
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -410,7 +375,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     max_bucket_size: int | None = 500,
     hash_fn: str = "xxhash64",
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH.
 
@@ -432,9 +396,8 @@ def minhash_lsh_pairs(
 
     The signature frame persists internally (every downstream subtree —
     hot-bucket count, both self-join sides, both est re-attach sides —
-    reads it); pass ``_cache_registry`` to receive the handle and
-    unpersist it once downstream work has materialized —
-    ``minhash_dedup_components`` does this for the composed chain.
+    reads it) and is ``scoped``: the caller's ``cache_scope`` releases it
+    once downstream work has materialized.
 
     r11 SINGLE-cache shape: ``with_sig`` is the only persisted frame.
     Round 10 additionally cached the post-anti banded frame, but a
@@ -451,55 +414,27 @@ def minhash_lsh_pairs(
     fold.
     """
     assert num_hashes % bands == 0
-    r = num_hashes // bands
-    hf = _hash_family(hash_fn)
     # persist: the self-join would otherwise recompute the whole shingle +
     # signature pipeline for both sides (Spark's exchange reuse does not
     # fire across the join aliases here — verified in the physical plan).
     # The cached footprint is (doc_id, 64 longs) ≈ 0.5 KB/doc.
-    with_sig = _track_cache(
+    with_sig = scoped(
         minhash_signatures(
             docs, text_col, id_col, num_hashes, shingle_n, hash_fn
-        ),
-        _cache_registry,
-    )
-
-    # band key = hash of the comma-joined slot values, salted per band.
-    # Literal per-band expressions (not a lambda over sequence()) so the
-    # md5 family's distinct string salts stay plan-time constants.
-    band_hashes = F.array(
-        *[
-            hf(F.concat_ws(",", F.slice("sig", b * r + 1, r)), b)
-            for b in range(bands)
-        ]
+        ).persist()
     )
     banded = with_sig.select(
         "doc",
-        F.posexplode(band_hashes).alias("band", "band_hash"),
+        F.posexplode(_band_hashes(hash_fn, num_hashes, bands)).alias(
+            "band", "band_hash"
+        ),
     )
     if max_bucket_size is not None:
-        # Hot buckets are RARE by construction (a bucket over the cap is
-        # degenerate boilerplate), so find their keys with a map-side-
-        # combinable count (shuffle = (band, hash, partial_count) only)
-        # and drop members via a broadcast ANTI join — no sort, no extra
-        # exchange of `banded`. Measured 1.7× faster end-to-end than the
-        # window-count form at sf0.01/sf0.1. Worst-case hot-key count is
-        # bounded by n_rows / max_bucket_size; if an adversarial corpus
-        # ever made that too big to broadcast, a count window over the
-        # join key is the drop-in fallback.
-        hot = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_bucket_size)
-            .select("band", "band_hash")
-        )
         # NOT cached (r11): both self-join sides re-derive this from the
         # with_sig cache — band hashes + a broadcast anti-join per side,
         # cheap — instead of materializing a second cache whose captured
         # plan re-ran the signature aggregate (see docstring).
-        banded = banded.join(
-            F.broadcast(hot), ["band", "band_hash"], "left_anti"
-        )
+        banded = _drop_hot_keys(banded, ["band", "band_hash"], max_bucket_size)
     # candidate ids first, signatures re-attached BY ID after the
     # distinct (the x242/embedding_nn_pairs_lsh contract): the banded
     # self-join and the pair dedup shuffle (band, hash, doc) longs only —
@@ -586,7 +521,6 @@ def simhash_pairs(
     chunks: int = 4,
     n_bits: int = 64,
     hash_fn: str = "xxhash64",
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming, found by chunk
     banding (pigeonhole: ≤3 differing bits over 4 16-bit chunks ⇒ some chunk
@@ -594,9 +528,8 @@ def simhash_pairs(
     assert n_bits % chunks == 0
     width = n_bits // chunks
     # persist for the same self-join-recompute reason as minhash_lsh_pairs
-    sh = _track_cache(
-        simhash_signatures(docs, text_col, id_col, n_bits, hash_fn),
-        _cache_registry,
+    sh = scoped(
+        simhash_signatures(docs, text_col, id_col, n_bits, hash_fn).persist()
     )
     chunk_arr = F.array(
         *[
@@ -669,7 +602,9 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     O(component diameter) — near-dup clusters are shallow (stars/cliques),
     so 2-3 rounds typical; each round is one join + one groupBy-min on
     (node, label) pairs only. localCheckpoint per round truncates the
-    lineage so plans don't grow exponentially.
+    lineage so plans don't grow exponentially; the checkpoints are
+    ``scoped`` and the returned frame reads the last one, so the caller's
+    scope must stay open until the result has materialized.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -708,7 +643,7 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
                 ).alias("_moved"),
             )
         )
-        updated = updated.localCheckpoint(eager=True)
+        updated = scoped(updated.localCheckpoint(eager=True))
         converged = updated.where(F.col("_moved")).isEmpty()
         labels = updated.drop("_moved")
         if converged:
@@ -803,7 +738,6 @@ def embedding_nn_pairs_lsh(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     block_col: str | None = None,
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """:func:`embedding_nn_pairs` in its documented 100 TB mode: the
     per-label blocks are replaced by sign-LSH band buckets (the x8
@@ -888,7 +822,6 @@ def embedding_nn_pairs_lsh(
         n_planes=n_planes,
         bands=bands,
         hot_bucket_cap=hot_bucket_cap,
-        _cache_registry=_cache_registry,
     )
     pairs = (
         cool.alias("l")
@@ -975,7 +908,6 @@ def incremental_minhash_dedup(
     history_sig_col: str | None = None,
     incoming_sig_df: DataFrame | None = None,
     exact_precollapse: bool = True,
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Continuous-ingestion NEAR-dup admission — the banded-MinHash
     counterpart of :func:`incremental_exact_dedup`: an incoming doc is
@@ -1028,19 +960,16 @@ def incremental_minhash_dedup(
     signatures, band keys, candidates, estimates, keep set — mirror
     bit-for-bit into DuckDB (the x240 catalog entry)."""
     assert num_hashes % bands == 0
-    r = num_hashes // bands
-    hf = _hash_family(hash_fn)
 
     if exact_precollapse:
         keyed = incoming.select(
             F.col(id_col).alias("doc_id"),
             F.md5(normalize_text(F.col(text_col))).alias("_g"),
         )
-        gmap = _track_cache(
+        gmap = scoped(
             keyed.join(
                 keyed.groupBy("_g").agg(F.min("doc_id").alias("rep")), "_g"
-            ).select("doc_id", "rep"),
-            _cache_registry,
+            ).select("doc_id", "rep").persist()
         )
         rep_ids = gmap.where(F.col("doc_id") == F.col("rep")).select(
             F.col("doc_id").alias("_rep_id")
@@ -1077,34 +1006,22 @@ def incremental_minhash_dedup(
             history, text_col, id_col, num_hashes, shingle_n, hash_fn
         ).withColumn("is_hist", F.lit(True))
     # persist: banding, the two by-id sig re-attaches, and (in collapse
-    # mode) the rep filter all read this union; handles land in
-    # _cache_registry (the minhash_lsh_pairs contract) for the caller
-    # to release after materialization, or orphan for the next drain
-    sigs = _track_cache(inc_sig.unionByName(hist_sig), _cache_registry)
+    # mode) the rep filter all read this union; the caller's scope
+    # releases it after materialization. The banded frame below is NOT
+    # cached: a persist derived from this one re-runs the upstream plan
+    # (the minhash_lsh_pairs r11 finding)
+    sigs = scoped(inc_sig.unionByName(hist_sig).persist())
 
-    band_hashes = F.array(
-        *[
-            hf(F.concat_ws(",", F.slice("sig", b * r + 1, r)), b)
-            for b in range(bands)
-        ]
-    )
     # (band, hash, doc, side-bit) only — signatures stay out of the
     # bucket join and re-attach by id on the deduped candidate pairs
     banded = sigs.select(
         "doc", "is_hist",
-        F.posexplode(band_hashes).alias("band", "band_hash"),
+        F.posexplode(_band_hashes(hash_fn, num_hashes, bands)).alias(
+            "band", "band_hash"
+        ),
     )
     if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_bucket_size)
-            .select("band", "band_hash")
-        )
-        banded = banded.join(
-            F.broadcast(hot), ["band", "band_hash"], "left_anti"
-        )
-    banded = _track_cache(banded, _cache_registry)
+        banded = _drop_hot_keys(banded, ["band", "band_hash"], max_bucket_size)
 
     # partner keeps its side bit through the candidate distinct: the same
     # id can legitimately exist on BOTH sides (a doc re-ingested under
@@ -1314,11 +1231,10 @@ def minhash_dedup_components(
     where the blocked variant is the fully deterministic, oracle-
     verified one.
 
-    Cache discipline: ``minhash_lsh_pairs`` persists its signature
-    frame for the self-join; ``dedup_clusters`` eagerly
-    localCheckpoints its labels (truncating lineage), so those caches
-    are dead weight by the time this returns — they are unpersisted
-    here rather than leaked for the session lifetime.
+    Cache discipline: ``minhash_lsh_pairs``' signature cache is dead
+    weight once ``dedup_clusters`` has eagerly checkpointed the labels,
+    so this function's own scope releases it on return; the label
+    checkpoints back the returned frame and go to the caller's scope.
 
     Scale note: EXACT-COLLAPSE FIRST (``exact_dedup_normalized``, the
     x1/x2 hash groupBy) and hand this only the min-id copies, the way
@@ -1328,17 +1244,15 @@ def minhash_dedup_components(
     replicated corpus measured 6.8× wall-clock without the collapse vs
     2.3× with it, docs/SCALE.md), and a corpus-scale pile of identical
     docs overflows the hot-bucket cap and escapes dedup entirely."""
-    caches: list = []
-    cand = minhash_lsh_pairs(
-        docs, text_col, id_col, _cache_registry=caches, **lsh_kwargs
-    )
-    conf = ngram_jaccard_pairs(
-        docs, cand.select("id_a", "id_b"), text_col, id_col, shingle_n
-    ).where(F.col("jaccard") >= threshold)
-    comps = dedup_clusters(conf.select("id_a", "id_b"))
-    for c in caches:
-        c.unpersist()
-    return comps
+    # dedup_clusters runs in the context captured here, before the
+    # signature scope opens, so its checkpoints land in the caller's scope
+    caller = contextvars.copy_context()
+    with cache_scope():
+        cand = minhash_lsh_pairs(docs, text_col, id_col, **lsh_kwargs)
+        conf = ngram_jaccard_pairs(
+            docs, cand.select("id_a", "id_b"), text_col, id_col, shingle_n
+        ).where(F.col("jaccard") >= threshold)
+        return caller.run(dedup_clusters, conf.select("id_a", "id_b"))
 
 
 def duplicate_ngram_coverage(

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .dedup import _drop_hot_keys
+
 
 def blocked_fuzzy_pairs(
     df: DataFrame,
@@ -39,13 +41,7 @@ def blocked_fuzzy_pairs(
         block_expr.alias("blk"),
     )
     if block_cap is not None:
-        hot = (
-            b.groupBy("blk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > block_cap)
-            .select("blk")
-        )
-        b = b.join(F.broadcast(hot), "blk", "left_anti")
+        b = _drop_hot_keys(b, ["blk"], block_cap)
     c = b.select(
         F.col("a_id").alias("b_id"),
         F.col("a_name").alias("b_name"),

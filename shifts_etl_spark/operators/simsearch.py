@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from ..caching import scoped
 from ..functions.vectors import cosine_from_norms as _cosine_from_norms, cosine_similarity, l2_norm as _l2_norm
 
 
@@ -381,11 +382,14 @@ def lsh_topk(
     # persist: query and corpus sides below would otherwise each re-run the
     # Pandas-UDF signature pass (self-join recompute, no exchange reuse).
     # Only (vid, bucket) longs are cached/joined — vectors stay in the
-    # parquet scan until the re-rank re-attaches them by id.
-    buckets = sig.select(
-        F.col(id_col).alias("vid"),
-        F.explode("buckets").alias("bucket"),
-    ).persist()
+    # parquet scan until the re-rank re-attaches them by id. The caller's
+    # scope releases the cache.
+    buckets = scoped(
+        sig.select(
+            F.col(id_col).alias("vid"),
+            F.explode("buckets").alias("bucket"),
+        ).persist()
+    )
     qb = buckets.where(F.col("vid").isin(query_ids)).withColumnRenamed(
         "vid", "query_id"
     )
@@ -514,7 +518,6 @@ def hard_negative_topk(
     band_planes: int | None = 32,
     bands: int = 4,
     hot_bucket_cap: int = 64,
-    _cache_registry: list | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for every anchor,
     the top-``k`` most-similar vectors carrying a DIFFERENT label — the
@@ -583,7 +586,6 @@ def hard_negative_topk(
             n_planes=band_planes,
             bands=bands,
             hot_bucket_cap=hot_bucket_cap,
-            _cache_registry=_cache_registry,
         )
         cand = (
             cool.alias("a")

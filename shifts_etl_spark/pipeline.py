@@ -18,6 +18,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from .caching import scoped
 from .operators import flatten, kpi, quality
 from .sinks.staged import StagedWriter, clear_outputs
 from .sources import pages as pages_src
@@ -84,7 +85,6 @@ def prepare_training_data(
     max_length_quantile: float | None = None,
     max_cross_doc_dup_frac: float | None = None,
     lsh_kwargs: dict | None = None,
-    _cache_registry: list | None = None,
 ) -> dict[str, DataFrame]:
     """The LLM-data capstone pipeline, composed from the extension
     operators: quality-filter → optional repetition filter (Gopher-style
@@ -104,7 +104,10 @@ def prepare_training_data(
     Returns the intermediate DataFrames keyed by stage (and writes each
     stage as a table batch when ``output_dir`` is given), so callers can
     audit per-stage row drops — the shape of a production curation run.
-    Input: any DataFrame with (doc_id long, text string).
+    Input: any DataFrame with (doc_id long, text string). The stage
+    caches and near-dup checkpoints back the returned lazy frames, so they
+    go to the caller's ``cache_scope``, which must stay open until the
+    stages have materialized.
 
     Sibling of ``curate()``: this pipeline ends in the TRAINING-SHARD
     shapes (context-window chunks, packed sequences); curate() ends in a
@@ -132,13 +135,9 @@ def prepare_training_data(
     if not 0 <= min_jaccard <= 1:
         raise ValueError(f"min_jaccard must be in [0, 1]: got {min_jaccard}")
 
-    docs = docs.select("doc_id", "text").persist(StorageLevel.MEMORY_AND_DISK)
-    if _cache_registry is not None:
-        # the two stage caches back the RETURNED lazy frames, so this
-        # function cannot release them itself; callers that consume the
-        # stages eagerly (the x237 ledger entry) collect the handles here
-        # and unpersist once done — same convention as minhash_lsh_pairs
-        _cache_registry.append(docs)
+    docs = scoped(
+        docs.select("doc_id", "text").persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
     quality = quality_filter(docs)
     kept = docs.join(quality.where(F.col("keep")).select("doc_id"), "doc_id")
@@ -172,9 +171,7 @@ def prepare_training_data(
         kept = kept.join(over.select("doc_id"), "doc_id", "left_anti")
 
     scrubbed = kept.select("doc_id", scrub_pii(F.col("text")).alias("text"))
-    scrubbed = scrubbed.persist(StorageLevel.MEMORY_AND_DISK)
-    if _cache_registry is not None:
-        _cache_registry.append(scrubbed)
+    scrubbed = scoped(scrubbed.persist(StorageLevel.MEMORY_AND_DISK))
 
     # Collapse exact (normalized) duplicates BEFORE the LSH stage: exact
     # copies share identical shingle sets, hence identical signatures and
@@ -272,6 +269,7 @@ def curate(
     text, split) and a list of per-stage accounting dicts
     (stage, n_docs, n_chars, n_tokens, docs_dropped, chars_removed) whose
     arithmetic a pytest pins at sf0.1 (tests/test_curate_pipeline.py).
+    ``curated`` is persisted and recorded in the caller's ``cache_scope``.
 
     Scale shape: every stage is one of the already-audited operator plans
     (no new shuffle patterns); survivors are persisted between stages so
@@ -463,12 +461,13 @@ def curate(
         .when(u < train_frac + val_frac, "val")
         .otherwise("test")
     )
-    # the RETURNED frame carries the cache so the caller can release it
-    # (curated.unpersist()); the last intermediate is freed here — curate
-    # leaks no cache handle the caller can't reach
-    curated = cur_df.select(
-        "doc_id", "source", "text", split.alias("split")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the RETURNED frame's cache goes to the caller's scope; the last
+    # intermediate is freed here
+    curated = scoped(
+        cur_df.select(
+            "doc_id", "source", "text", split.alias("split")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     account("split", curated)
     cur_df.unpersist()
 

@@ -53,6 +53,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ...caching import cache_scope
 from ...operators import dedup, profile, simsearch
 from ._shared import (
     _STOP_EN,
@@ -263,10 +264,10 @@ def x231_curation_ledger(spark, sf_dir):
     entries say they do."""
     from ...pipeline import curate
 
-    curated, ledger = curate(
-        spark, _t(spark, sf_dir, "documents"), budget_docs=200
-    )
-    curated.unpersist()
+    with cache_scope():
+        _, ledger = curate(
+            spark, _t(spark, sf_dir, "documents"), budget_docs=200
+        )
     return _ledger_df(spark, ledger)
 
 
@@ -280,10 +281,10 @@ def x232_curation_ledger_tokens(spark, sf_dir):
     window, so the shared stages stay literally identical."""
     from ...pipeline import curate
 
-    curated, ledger = curate(
-        spark, _t(spark, sf_dir, "documents"), budget_tokens=500
-    )
-    curated.unpersist()
+    with cache_scope():
+        _, ledger = curate(
+            spark, _t(spark, sf_dir, "documents"), budget_tokens=500
+        )
     return _ledger_df(spark, ledger)
 
 
@@ -298,13 +299,13 @@ def x233_curation_decontam(spark, sf_dir):
     from ...pipeline import curate
 
     d = _t(spark, sf_dir, "documents")
-    curated, ledger = curate(
-        spark,
-        d.where(F.col("doc_id") >= 20),
-        budget_docs=200,
-        eval_docs=d.where(F.col("doc_id") < 20),
-    )
-    curated.unpersist()
+    with cache_scope():
+        _, ledger = curate(
+            spark,
+            d.where(F.col("doc_id") >= 20),
+            budget_docs=200,
+            eval_docs=d.where(F.col("doc_id") < 20),
+        )
     return _ledger_df(spark, ledger)
 
 
@@ -320,14 +321,14 @@ def x234_curation_ledger_minhash(spark, sf_dir):
     shared template."""
     from ...pipeline import curate
 
-    curated, ledger = curate(
-        spark,
-        _t(spark, sf_dir, "documents"),
-        budget_docs=200,
-        neardup_method="minhash",
-        neardup_lsh_kwargs={"hash_fn": "md5"},
-    )
-    curated.unpersist()
+    with cache_scope():
+        _, ledger = curate(
+            spark,
+            _t(spark, sf_dir, "documents"),
+            budget_docs=200,
+            neardup_method="minhash",
+            neardup_lsh_kwargs={"hash_fn": "md5"},
+        )
     return _ledger_df(spark, ledger)
 
 
@@ -744,13 +745,11 @@ def _training_rows(spark, sf_dir, **prep_kwargs):
     x237/x238 oracles reproduce."""
     from ...pipeline import prepare_training_data
 
-    caches: list = []
-    try:
+    with cache_scope():
         stages = prepare_training_data(
             spark,
             _t(spark, sf_dir, "documents"),
             lsh_kwargs={"hash_fn": "md5"},
-            _cache_registry=caches,
             **prep_kwargs,
         )
         rows = [
@@ -773,9 +772,6 @@ def _training_rows(spark, sf_dir, **prep_kwargs):
         rows += [
             (f"split_{k}", int(sp.get(k, 0))) for k in ("train", "val", "test")
         ]
-    finally:
-        for c in caches:
-            c.unpersist()
     return spark.createDataFrame(rows, "stage string, n_rows long")
 
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..caching import scoped
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -34,12 +36,13 @@ def read_json_with_quarantine(
     full = T.StructType(
         schema.fields + [T.StructField(CORRUPT_COL, T.StringType())]
     )
-    raw = (
+    # one parse feeds both filters; the caller's cache_scope releases it
+    raw = scoped(
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()  # one parse feeds both filters; tiny rows, unpersisted by caller if needed
+        .cache()
     )
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = raw.where(F.col(CORRUPT_COL).isNotNull()).select(

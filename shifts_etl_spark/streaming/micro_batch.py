@@ -18,6 +18,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import cache_scope, scoped
 from ..operators import flatten
 from ..schemas import SHIFT_DOC_SCHEMA
 from ..sinks.staged import StagedWriter
@@ -570,28 +571,34 @@ def streaming_curation_admit(
             scrubbed = unblocked.select(
                 "doc_id", "source", scrub_pii(F.col("text")).alias("text")
             )
-            passing = scrubbed.where(
-                F.round(quality_score(F.col("text")), 4) >= min_quality
-            ).persist()
             sp = batch_df.sparkSession
-            history = _admitted_hashes(sp, writer)
-            keep = incremental_exact_dedup(
-                passing, history, history_hash_col="content_hash"
-            ).select("keep_id")
-            admitted = passing.join(
-                keep.withColumnRenamed("keep_id", "doc_id"), "doc_id", "semi"
-            ).persist()
-            caches: list = []
-            survivors = admitted
-            batch_sigs = None
-            try:
+            # foreachBatch calls run on a streaming thread: this scope
+            # owns every cache the epoch takes, the LSH operator's too
+            with cache_scope():
+                passing = scoped(
+                    scrubbed.where(
+                        F.round(quality_score(F.col("text")), 4) >= min_quality
+                    ).persist()
+                )
+                history = _admitted_hashes(sp, writer)
+                keep = incremental_exact_dedup(
+                    passing, history, history_hash_col="content_hash"
+                ).select("keep_id")
+                admitted = scoped(
+                    passing.join(
+                        keep.withColumnRenamed("keep_id", "doc_id"),
+                        "doc_id",
+                        "semi",
+                    ).persist()
+                )
+                survivors = admitted
                 if neardup_threshold is not None:
                     # one signature pass serves both admission and the
                     # sidecar append; exact_precollapse=False because the
                     # exact stage above already collapsed the batch
-                    batch_sigs = minhash_signatures(
-                        admitted, **sig_kwargs
-                    ).persist()
+                    batch_sigs = scoped(
+                        minhash_signatures(admitted, **sig_kwargs).persist()
+                    )
                     nd_keep = (
                         incremental_minhash_dedup(
                             admitted,
@@ -600,15 +607,14 @@ def streaming_curation_admit(
                             history_sig_col="sig",
                             incoming_sig_df=batch_sigs,
                             exact_precollapse=False,
-                            _cache_registry=caches,
                             **nd_kwargs,
                         )
                         .where(F.col("keep"))
                         .select("doc_id")
                     )
-                    survivors = admitted.join(
-                        nd_keep, "doc_id", "semi"
-                    ).persist()
+                    survivors = scoped(
+                        admitted.join(nd_keep, "doc_id", "semi").persist()
+                    )
                 new_hashes = survivors.select(
                     F.md5(normalize_text(F.col("text"))).alias("content_hash")
                 )
@@ -624,15 +630,6 @@ def streaming_curation_admit(
                 writer.write_batch(
                     tables, batch_id=_epoch_batch_id(sid, epoch_id)
                 )
-            finally:
-                for c in caches:
-                    c.unpersist()
-                if batch_sigs is not None:
-                    batch_sigs.unpersist()
-                if survivors is not admitted:
-                    survivors.unpersist()
-                admitted.unpersist()
-                passing.unpersist()
             if compact_every and (epoch_id + 1) % compact_every == 0:
                 writer.compact(sp, "admitted_hashes")
                 if writer.table_exists("admitted_sigs"):

@@ -1,12 +1,36 @@
+import os
+
 import pytest
 
+from shifts_etl_spark.caching import cache_scope
 from shifts_etl_spark.session import get_spark
+
+# The session factory's 16g driver default lets the test JVM's heap grow
+# past 15 GB RSS over the full suite, more than a 15 GB machine without
+# swap holds; the suite's largest inputs (sf0.1 curate() runs) fit in 4g.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _test_cache_scope():
+    """Each test owns one cache scope, as a catalog entry or CLI command
+    does: operators can record their caches, and none outlives the test."""
+    with cache_scope():
+        yield
+
+
+@pytest.fixture
+def persisted_rdds(spark):
+    """Returns the ids of the RDDs the session holds persisted: Dataset
+    caches and local checkpoints alike."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs())
 
 
 # Tests measured >= ~10 s in the full-suite profile (r11; 29m17s total,
@@ -43,7 +67,6 @@ SLOW_TESTS = {
     "tests/test_round2b_ops.py::test_pagerank_matches_numpy_power_iteration",
     "tests/test_round3_ops.py::test_snapshot_diff_matches_dict_reference",
     "tests/test_round8_ops.py::test_incremental_neardup_signature_only_history",
-    "tests/test_round9_ops.py::test_registry_less_lsh_calls_orphan_bounded",
     "tests/test_round9_ops.py::test_semantic_dedup_band_knob_certified_shape",
     "tests/test_round9_ops.py::test_semantic_dedup_banded_drops_subset_of_exact",
     "tests/test_stateful_skew.py::test_stream_stream_join",

@@ -11,6 +11,7 @@ import math
 import duckdb
 import pytest
 
+from shifts_etl_spark.caching import cache_scope
 from shifts_etl_spark.plans.extensions.composed import COMPOSED
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -45,11 +46,14 @@ def _canon(rows, cols):
 
 
 @pytest.mark.parametrize("name", sorted(COMPOSED))
-def test_composed_entry_matches_oracle(spark, duck, name):
+def test_composed_entry_matches_oracle(spark, duck, persisted_rdds, name):
     fn, sql = COMPOSED[name]
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = sdf.collect()
+    before = persisted_rdds()
+    with cache_scope():
+        sdf = fn(spark, SF_DIR)
+        spark_cols = sdf.columns
+        spark_rows = sdf.collect()
+    assert persisted_rdds() - before == set()
     res = duck.execute(sql)
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from shifts_etl_spark.caching import cache_scope
 from shifts_etl_spark.operators.textstats import normalize_text
 from shifts_etl_spark.pipeline import curate
 
@@ -58,16 +59,18 @@ def curated(spark):
         planted, "doc_id long, source string, text string"
     )
     all_docs = docs.unionByName(extra)
-    out, ledger = curate(
-        spark,
-        all_docs,
-        budget_docs=800,
-        min_quality=0.5,
-        span_drop_frac=0.8,
-    )
-    out = out.persist()
-    out.count()
-    return out, ledger, all_docs
+    # module-scoped fixtures set up before the per-test cache scope, so
+    # the module's tests share this scope and the persisted curated frame
+    with cache_scope():
+        out, ledger = curate(
+            spark,
+            all_docs,
+            budget_docs=800,
+            min_quality=0.5,
+            span_drop_frac=0.8,
+        )
+        out.count()
+        yield out, ledger, all_docs
 
 
 def test_ledger_shape_and_monotonic_docs(curated):

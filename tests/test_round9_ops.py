@@ -1,7 +1,6 @@
-"""Round-9 fixes: orphaned-cache discipline for registry-less LSH calls,
-streaming neardup_kwargs validation, and the re-keyed scale-correct
-defaults (x13 fixed-cell IVF, x6/x121 band-blocked NN, x36 banded
-SemDeDup candidates, x242 sidecar-path certification).
+"""Round-9 fixes: streaming neardup_kwargs validation and the re-keyed
+scale-correct defaults (x13 fixed-cell IVF, x6/x121 band-blocked NN,
+x36 banded SemDeDup candidates, x242 sidecar-path certification).
 """
 
 from __future__ import annotations
@@ -12,40 +11,6 @@ from pyspark.sql import Row, functions as F
 from shifts_etl_spark.operators import curation, dedup, simsearch
 
 SF = "/root/testdata/sf0.001"
-
-
-# --------------------------------------------------------------------------
-# cache discipline (r8 ADVICE: registry-less calls leaked persists)
-# --------------------------------------------------------------------------
-
-def test_registry_less_lsh_calls_orphan_bounded(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(100)
-    dedup.release_orphaned_caches()
-    out = dedup.embedding_nn_pairs_lsh(emb)
-    out.count()
-    first = len(dedup._ORPHANED_CACHES)
-    assert first > 0  # registry-less call parks its handles as orphans
-    # repeated registry-less calls never grow the live set past the
-    # bound (oldest handles unpersist FIFO) — the r8 ADVICE leak stays
-    # fixed while RECENT handles keep Spark's plan-cache reuse warm (an
-    # eager per-call drain measured a 5x bench regression on x3)
-    for _ in range(dedup._ORPHAN_CACHE_BOUND):
-        dedup.embedding_nn_pairs_lsh(emb).count()
-    assert len(dedup._ORPHANED_CACHES) <= dedup._ORPHAN_CACHE_BOUND
-    released = dedup.release_orphaned_caches()
-    assert released <= dedup._ORPHAN_CACHE_BOUND
-    assert len(dedup._ORPHANED_CACHES) == 0
-
-
-def test_registry_calls_never_orphan(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(80)
-    dedup.release_orphaned_caches()
-    reg: list = []
-    dedup.minhash_lsh_pairs(docs, _cache_registry=reg).count()
-    assert len(dedup._ORPHANED_CACHES) == 0
-    assert len(reg) > 0
-    for c in reg:
-        c.unpersist()
 
 
 # --------------------------------------------------------------------------

@@ -9,6 +9,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from shifts_etl_spark.caching import cache_scope
 from shifts_etl_spark.operators import dedup
 from shifts_etl_spark.session import get_spark
 from shifts_etl_spark.sources.tables import load_table
@@ -22,7 +23,8 @@ def main() -> None:
     for label, cap in [("cap=None", None), ("cap=500", 500)]:
         for trial in range(3):
             t0 = time.perf_counter()
-            n = dedup.minhash_lsh_pairs(docs, max_bucket_size=cap).count()
+            with cache_scope():
+                n = dedup.minhash_lsh_pairs(docs, max_bucket_size=cap).count()
             dt = time.perf_counter() - t0
             print(f"{label} trial{trial}: {dt:.3f}s ({n} pairs)")
 

@@ -19,6 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shifts_etl_spark.caching import cache_scope
 from shifts_etl_spark.operators import dedup
 from shifts_etl_spark.session import get_spark
 from shifts_etl_spark.sources.tables import load_table
@@ -71,7 +72,8 @@ def count_jobs(spark, tag: str, fn, pairs) -> tuple[int, float, int]:
     sc = spark.sparkContext
     sc.setJobGroup(tag, tag)
     t0 = time.time()
-    n = fn(pairs).count()
+    with cache_scope():
+        n = fn(pairs).count()
     dt = time.time() - t0
     jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
     sc.setJobGroup(None, None)
